@@ -39,7 +39,7 @@ from tracy_matdb_spark.session import get_session
 def main(sf_dir: str, work_dir: str) -> None:
     from tracy_matdb_spark.streaming.ingest import incremental_ingest
     from tracy_matdb_spark.streaming.windows import (
-        run_stateful_to_completion,
+        run_to_completion,
         stateful_user_totals_tws,
     )
 
@@ -83,8 +83,8 @@ def main(sf_dir: str, work_dir: str) -> None:
         .parquet(target)
         .select("user_id", "value")
     )
-    totals = run_stateful_to_completion(
-        stateful_user_totals_tws(ev_stream), "example_user_totals"
+    totals = run_to_completion(
+        stateful_user_totals_tws(ev_stream), "example_user_totals", mode="update"
     )
     print("top users by event count:")
     for row in totals.orderBy(F.col("n_events").desc(), "user_id").limit(5).collect():

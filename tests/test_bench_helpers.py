@@ -90,6 +90,11 @@ def test_streaming_ingest_bench_dedupes(spark):
     assert out["rows_offered"] > out["rows_source"]
     assert out["rows_ingested"] == out["rows_source"]
     assert out["batches"] == 3 and out["sec"] > 0
+    # one durationMs phase split per micro-batch, read from the queries'
+    # progress; a batch's addBatch is part of its trigger execution
+    durations = out["batch_duration_ms"]
+    assert len(durations) == out["batches"]
+    assert all(d["addBatch"] <= d["triggerExecution"] for d in durations)
 
 
 def test_bench_compare_verdicts():

@@ -502,3 +502,34 @@ def test_orbit_perms_and_is_rep_memos_identical_and_bounded():
     got2 = [en._hnf_is_rep(lat, h6) for lat, h6 in rows]  # warm pass reads it
     want = [verdict(lat, h6) for lat, h6 in rows]
     assert got1 == want and got2 == want
+
+
+def test_orbit_perms_cache_evicts_oldest_and_skips_oversized(monkeypatch):
+    """The orbit-perms memo is FIFO: over the bound, the OLDEST entry
+    goes first; a result larger than the whole bound is returned
+    uncached and leaves the cache as it was."""
+    from tracy_matdb_spark.operators import enumerated as en
+
+    a, b, c = (1, 0, 1, 0, 0, 2), (1, 0, 2, 0, 0, 1), (2, 0, 1, 0, 0, 1)
+    size = {}
+    for h in (a, b, c):
+        p, t, _ = en._orbit_perms(h, "fcc")
+        size[h] = p.size + t.size
+    monkeypatch.setattr(en, "_ORBIT_PERMS_CACHE", {})
+    monkeypatch.setattr(en, "_ORBIT_PERMS_ELEMS", [0])
+    # room for (a, b) and for (b, c), never for all three
+    monkeypatch.setattr(
+        en, "_ORBIT_PERMS_MAX_ELEMS", max(size[a] + size[b], size[b] + size[c])
+    )
+    en._orbit_perms(a, "fcc")
+    en._orbit_perms(b, "fcc")
+    en._orbit_perms(c, "fcc")
+    assert list(en._ORBIT_PERMS_CACHE) == [(b, "fcc"), (c, "fcc")]
+    assert en._ORBIT_PERMS_ELEMS[0] == size[b] + size[c]
+
+    # oversized: the bound is below this one result, the cache is intact
+    big = (1, 0, 1, 0, 0, 4)
+    p, t, _ = en._orbit_perms(big, "bcc")
+    assert p.size + t.size > en._ORBIT_PERMS_MAX_ELEMS
+    assert list(en._ORBIT_PERMS_CACHE) == [(b, "fcc"), (c, "fcc")]
+    assert en._ORBIT_PERMS_ELEMS[0] == size[b] + size[c]

@@ -43,7 +43,7 @@ def test_stateful_totals_matches_batch(spark, tmp_path):
     import pandas as pd
 
     from tracy_matdb_spark.streaming.windows import (
-        run_stateful_to_completion,
+        run_to_completion,
         stateful_user_totals,
     )
 
@@ -64,7 +64,7 @@ def test_stateful_totals_matches_batch(spark, tmp_path):
     from tracy_matdb_spark.streaming.windows import read_events_stream
 
     ev = read_events_stream(spark, str(src))
-    out = run_stateful_to_completion(stateful_user_totals(ev), "t_stateful").toPandas()
+    out = run_to_completion(stateful_user_totals(ev), "t_stateful", mode="update").toPandas()
     batch = (
         spark.read.parquet(str(src / "events.parquet"))
         .groupBy("user_id")

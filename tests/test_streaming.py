@@ -180,7 +180,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
 def test_streaming_interval_join_matches_batch(spark):
     # stream-stream interval join pairs == batch bucketed range join counts
     ev = S.read_events_stream(spark, SF_SMOKE)
-    pairs = S.run_append_to_completion(S.interval_join_stream(ev), "t_ivjoin").toPandas()
+    pairs = S.run_to_completion(S.interval_join_stream(ev), "t_ivjoin", mode="append").toPandas()
     got = pairs.groupby("err_id").size().rename("n").reset_index()
     want = REGISTRY["events_range_join_10m"].fn(spark, SF_SMOKE).toPandas()
     want_nonzero = want[want.n_clicks_10m > 0]
@@ -242,6 +242,69 @@ def test_incremental_ingest_dedupes_across_batches(spark, tmp_path):
     assert sorted(got3.auid) == ["a", "b", "c", "d"]
     # the historical "a" row is untouched (not re-appended, not replaced)
     assert float(got3[got3.auid == "a"].energy.iloc[0]) == 1.0
+
+
+def test_incremental_ingest_dedupes_under_glob_metachar_path(spark, tmp_path):
+    """A target under `run[1]/` must still be read back as history:
+    Spark globs read paths, and an unescaped `[1]` matches nothing, so
+    every batch used to look like the first one and `b` landed twice."""
+    from pyspark.sql import types as T
+
+    from tracy_matdb_spark.streaming.ingest import incremental_ingest
+
+    schema = T.StructType(
+        [T.StructField("auid", T.StringType()), T.StructField("energy", T.DoubleType())]
+    )
+    drop = tmp_path / "drop"
+    target = str(tmp_path / "run[1]" / "table")
+    ckpt = str(tmp_path / "ckpt")
+    drop.mkdir()
+    for name, keys in (("batch1", ["a", "b"]), ("batch2", ["b", "c"])):
+        spark.createDataFrame([(k, 1.0) for k in keys], schema).write.parquet(
+            str(drop / name)
+        )
+        incremental_ingest(
+            spark, str(drop), target, schema, key="auid", checkpoint_dir=ckpt
+        ).awaitTermination()
+    got = pd.read_parquet(target)
+    assert sorted(got.auid) == ["a", "b", "c"]
+
+
+def test_incremental_ingest_replayed_batch_appends_nothing(spark, tmp_path):
+    """Crash between the append and the checkpoint commit: with the last
+    commits/N entry gone, Spark replays batch N on restart, and the
+    history anti-join must reject every replayed row."""
+    from pyspark.sql import types as T
+
+    from tracy_matdb_spark.streaming.ingest import incremental_ingest
+
+    schema = T.StructType(
+        [T.StructField("auid", T.StringType()), T.StructField("energy", T.DoubleType())]
+    )
+    drop = tmp_path / "drop"
+    target = str(tmp_path / "table")
+    ckpt = tmp_path / "ckpt"
+    drop.mkdir()
+
+    def run():
+        q = incremental_ingest(
+            spark, str(drop), target, schema, key="auid", checkpoint_dir=str(ckpt)
+        )
+        q.awaitTermination()
+        return q
+
+    spark.createDataFrame(
+        [("a", 1.0), ("b", 2.0), ("b", 2.0), ("c", 3.0)], schema
+    ).write.parquet(str(drop / "batch1"))
+    run()
+    commits = ckpt / "commits"
+    last = max(int(f.name) for f in commits.iterdir() if f.name.isdigit())
+    (commits / str(last)).unlink()
+    (commits / f".{last}.crc").unlink(missing_ok=True)
+    q = run()
+    assert [p["batchId"] for p in q.recentProgress] == [last]  # replayed
+    got = spark.read.parquet(target).toPandas()
+    assert len(got) == got.auid.nunique() == 3
 
 
 def test_incremental_atoms_h5_ingest(spark, tmp_path):
@@ -382,7 +445,7 @@ def test_stateful_user_totals_tws(spark, tmp_path):
 
     from tracy_matdb_spark.streaming.windows import (
         read_events_stream,
-        run_stateful_to_completion,
+        run_to_completion,
         stateful_user_totals_tws,
     )
 
@@ -392,8 +455,8 @@ def test_stateful_user_totals_tws(spark, tmp_path):
     )
     try:
         ev = read_events_stream(spark, "/root/testdata/sf0.001")
-        out = run_stateful_to_completion(
-            stateful_user_totals_tws(ev), "tws_test_q"
+        out = run_to_completion(
+            stateful_user_totals_tws(ev), "tws_test_q", mode="update"
         ).orderBy("user_id")
         batch = (
             spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -446,7 +509,7 @@ def test_stateful_typemap_tws_list_and_map_state(spark):
     the batch aggregate (integer-cents state is order-independent)."""
     from tracy_matdb_spark.streaming.windows import (
         read_events_stream,
-        run_stateful_to_completion,
+        run_to_completion,
         stateful_typemap_tws,
     )
 
@@ -456,8 +519,8 @@ def test_stateful_typemap_tws_list_and_map_state(spark):
     )
     try:
         ev = read_events_stream(spark, "/root/testdata/sf0.001")
-        out = run_stateful_to_completion(
-            stateful_typemap_tws(ev), "typemap_test_q"
+        out = run_to_completion(
+            stateful_typemap_tws(ev), "typemap_test_q", mode="update"
         ).orderBy("user_id")
         batch = spark.sql(
             """
@@ -520,7 +583,7 @@ def test_tws_operators_pin_time_mode_none(spark, monkeypatch):
     than "none" makes MicroBatchExecution schedule timer-sweep batches
     after every data batch ("No new data but cleaning up state"), which
     with a finite source + processAllAvailable never terminates — the
-    run_stateful_to_completion harness would hang forever. The hazard
+    run_to_completion harness would hang forever. The hazard
     is documented at the call sites; this test makes it structural:
     capture the timeMode every typed-state operator passes at
     plan-build time and pin it to "none"."""
@@ -557,8 +620,8 @@ def test_run_stateful_to_completion_empty_source(spark, tmp_path):
         .write.parquet(os.path.join(empty_dir, "events.parquet"))
     )
     ev = S.read_events_stream(spark, empty_dir)
-    out = S.run_stateful_to_completion(
-        S.stateful_user_totals(ev), "t_empty_source_q"
+    out = S.run_to_completion(
+        S.stateful_user_totals(ev), "t_empty_source_q", mode="update"
     )
     assert out.count() == 0
 

@@ -247,14 +247,15 @@ def load(spark: SparkSession, sf_dir: str):
 def events_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tracy_matdb_spark.streaming.windows import (
         read_events_stream,
-        run_stateful_to_completion,
+        run_to_completion,
         stateful_user_totals,
     )
 
     ev = read_events_stream(spark, sf_dir)
-    out = run_stateful_to_completion(
+    out = run_to_completion(
         stateful_user_totals(ev),
         "stateful_totals_q",
+        mode="update",
         registry_name="events_stateful_totals",
     )
     return out.orderBy("user_id")
@@ -368,7 +369,7 @@ def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tracy_matdb_spark.streaming.windows import (
         read_events_stream,
-        run_stateful_to_completion,
+        run_to_completion,
         stateful_user_totals_tws,
     )
 
@@ -382,9 +383,10 @@ def events_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         ev = read_events_stream(spark, sf_dir)
-        out = run_stateful_to_completion(
+        out = run_to_completion(
             stateful_user_totals_tws(ev),
             "stateful_totals_tws_q",
+            mode="update",
             registry_name="events_stateful_totals_tws",
         )
         # the memory-sink table survives the provider reset below; the
@@ -417,7 +419,7 @@ def events_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_typemap_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tracy_matdb_spark.streaming.windows import (
         read_events_stream,
-        run_stateful_to_completion,
+        run_to_completion,
         stateful_typemap_tws,
     )
 
@@ -431,9 +433,10 @@ def events_typemap_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         ev = read_events_stream(spark, sf_dir)
-        out = run_stateful_to_completion(
+        out = run_to_completion(
             stateful_typemap_tws(ev),
             "typemap_tws_q",
+            mode="update",
             registry_name="events_typemap_tws",
         )
         out = out.orderBy("user_id").localCheckpoint(eager=True)

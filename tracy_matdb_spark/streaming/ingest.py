@@ -3,25 +3,119 @@
 The reference's active-learning loop appends each iteration's selected
 configs to the database, deduping against all history by content hash
 (reference matdb/database/active.py:158-205, mtp.py:894-933). The batch
-form of that loop lives in operators/active.py; this is the streaming
-form from SURVEY.md §2.11's mapping: a Structured Streaming file source
-watches a drop directory, and each micro-batch is upserted into the
-target table with an anti-join dedupe — iteration number = streaming
-batch id, replacing the reference's per-iteration pkl membership files.
+form lives in operators/active.py; this is the streaming form
+(SURVEY.md §2.11): a file source watches a drop directory and each
+micro-batch is upserted into the target table, iteration number =
+streaming batch id.
 
-At scale the drop directory becomes an object-store prefix (or Kafka)
-and the anti-join's right side stays a key-only projection — the
-existing-keys read is column-pruned to the hash column, so history
-grows the dedupe cost only by key bytes, not record bytes.
+The entry points (parquet, atoms.h5 and WARC drops) only build a source
+stream and a parser; the upsert is the one primitive `_upsert_stream`.
+Per micro-batch it parses, anti-joins the keys already in the target
+(read with an explicit key-only schema, so history costs key bytes, not
+record bytes), drops in-batch duplicate keys, stamps the batch id and
+appends. The anti-join also makes a replayed micro-batch append nothing.
+
+First-batch rule: there is no history iff the literal target path does
+not exist on the session's Hadoop FileSystem. Otherwise the history read
+is unconditional, on the glob-escaped path (Spark globs read paths, so a
+target under `run[1]/` would otherwise match nothing). A read error
+never counts as "first batch".
 """
 
 from __future__ import annotations
 
+import re
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.errors import AnalysisException
 from pyspark.sql.streaming import StreamingQuery
+
+
+def _glob_escape(path: str) -> str:
+    """Escape Hadoop glob metacharacters so a read matches `path` literally."""
+    return re.sub(r"([\\\[\]{}*?])", r"\\\1", path)
+
+
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jpath.getFileSystem(conf).exists(jpath)
+
+
+def _upsert_stream(
+    stream: DataFrame,
+    parse: Callable[[DataFrame], DataFrame],
+    schema: T.StructType,
+    keys: list[str],
+    target_path: str,
+    tag_col: str,
+    checkpoint_dir: str | None,
+) -> StreamingQuery:
+    """Start an availableNow query that upserts `parse(batch)` (rows of
+    `schema`) into the parquet table at `target_path`: rows whose `keys`
+    are already in the table or earlier in the batch are dropped, the
+    rest are appended with the micro-batch id in `tag_col`."""
+    # explicit key-only schema: no per-batch footer inference (measured
+    # as part of ~0.08 s/batch of driver-side plan building; the target
+    # is rewritten every batch so no relation cache can help it)
+    key_schema = T.StructType([schema[k] for k in keys])
+    history_path = _glob_escape(target_path)
+
+    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
+        session = batch_df.sparkSession
+        fresh = parse(batch_df)
+        if _path_exists(session, target_path):
+            seen = session.read.schema(key_schema).parquet(history_path)
+            # anti-join BEFORE the dropDuplicates shuffle: membership
+            # filtering commutes with pick-one-per-key (all rows of a
+            # key are dropped or kept together), and the broadcast
+            # anti-join is map-side — so already-seen rows never cross
+            # the dedup exchange (guide §2.3, filter before shuffle)
+            fresh = fresh.join(seen, keys, "left_anti")
+        (
+            fresh.dropDuplicates(keys)
+            .withColumn(tag_col, F.lit(batch_id))
+            .write.mode("append")
+            .parquet(target_path)
+        )
+
+    writer = stream.writeStream.foreachBatch(_upsert).trigger(availableNow=True)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
+
+
+def _binary_drop_stream(spark: SparkSession, drop_dir: str, glob: str) -> DataFrame:
+    return (
+        spark.readStream.format("binaryFile")
+        # streaming sources require a schema
+        .schema("path string, modificationTime timestamp, length long, content binary")
+        .option("pathGlobFilter", glob)
+        .option("recursiveFileLookup", "true")
+        .load(drop_dir)
+    )
+
+
+def _file_parser(
+    parse_file: Callable, schema: T.StructType
+) -> Callable[[DataFrame], DataFrame]:
+    """binaryFile batch -> rows of `schema`; `parse_file(path, content)`
+    returns one file's rows."""
+    import pandas as pd
+
+    cols = schema.fieldNames()
+
+    def _parse(batches):
+        for pdf in batches:
+            rows: list = []
+            for p, c in zip(pdf["path"], pdf["content"]):
+                rows.extend(parse_file(p, c))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return lambda batch_df: batch_df.select("path", "content").mapInPandas(_parse, schema)
 
 
 def incremental_ingest(
@@ -42,37 +136,6 @@ def incremental_ingest(
     already-processed files, so the same dropped file is never ingested
     twice even across restarts.
     """
-
-    # key-only schema for the history read: the anti-join right side
-    # needs just the key column, and handing the reader an explicit
-    # schema skips the per-batch footer schema-inference pass (measured
-    # as part of ~0.08 s/batch of driver-side plan building; the target
-    # is rewritten every batch so no relation cache can help it)
-    key_schema = T.StructType([schema[key]])
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        fresh = batch_df
-        try:
-            seen = (
-                batch_df.sparkSession.read.schema(key_schema)
-                .parquet(target_path)
-                .select(key)
-            )
-            # anti-join BEFORE the dropDuplicates shuffle: membership
-            # filtering commutes with pick-one-per-key (all rows of a
-            # key are dropped or kept together), and the broadcast
-            # anti-join is map-side — so already-seen rows never cross
-            # the dedup exchange (guide §2.3, filter before shuffle)
-            fresh = fresh.join(seen, key, "left_anti")
-        except AnalysisException:
-            pass  # first batch: target does not exist yet
-        (
-            fresh.dropDuplicates([key])
-            .withColumn("iteration", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(target_path)
-        )
-
     stream = (
         spark.readStream.schema(schema)
         .format("parquet")
@@ -82,10 +145,9 @@ def incremental_ingest(
         .option("pathGlobFilter", "*.parquet")
         .load(drop_dir)
     )
-    writer = stream.writeStream.foreachBatch(_upsert).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _upsert_stream(
+        stream, lambda df: df, schema, [key], target_path, "iteration", checkpoint_dir
+    )
 
 
 def incremental_atoms_h5_ingest(
@@ -107,58 +169,17 @@ def incremental_atoms_h5_ingest(
     anti-joins history on uuid, and appends. At 100 TB the drop dir is
     an object-store prefix and the history read stays pruned to the
     uuid column."""
-    import pandas as pd
-
     from tracy_matdb_spark.sources.hdf5io import CONFIG_SCHEMA, parse_atoms_h5_bytes
 
-    def _parse(batches):
-        for pdf in batches:
-            rows = [
-                parse_atoms_h5_bytes(c, p) for p, c in zip(pdf["path"], pdf["content"])
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in CONFIG_SCHEMA.fields])
-
-    uuid_schema = T.StructType([CONFIG_SCHEMA["uuid"]])
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        parsed = batch_df.select("path", "content").mapInPandas(_parse, CONFIG_SCHEMA)
-        try:
-            # key-only explicit schema: no per-batch footer inference,
-            # and the anti-join runs before the dedup shuffle (§2.3)
-            seen = (
-                batch_df.sparkSession.read.schema(uuid_schema)
-                .parquet(target_path)
-                .select("uuid")
-            )
-            parsed = parsed.join(seen, "uuid", "left_anti")
-        except AnalysisException:
-            pass  # first batch: target does not exist yet
-        parsed = parsed.dropDuplicates(["uuid"])
-        (
-            parsed.withColumn("iteration", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(target_path)
-        )
-
-    binary_file_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modificationTime", T.TimestampType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
+    return _upsert_stream(
+        _binary_drop_stream(spark, drop_dir, "*.h5"),
+        _file_parser(lambda p, c: [parse_atoms_h5_bytes(c, p)], CONFIG_SCHEMA),
+        CONFIG_SCHEMA,
+        ["uuid"],
+        target_path,
+        "iteration",
+        checkpoint_dir,
     )
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_file_schema)  # streaming sources require one
-        .option("pathGlobFilter", "*.h5")
-        .option("recursiveFileLookup", "true")
-        .load(drop_dir)
-    )
-    writer = stream.writeStream.foreachBatch(_upsert).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
 
 
 def streaming_warc_ingest(
@@ -179,57 +200,17 @@ def streaming_warc_ingest(
     path uses, and anti-joins history on the record key so re-crawled
     URLs with identical capture dates never duplicate. At 100 TB the
     history read prunes to the two key columns."""
-    import pandas as pd
-
     from tracy_matdb_spark.sources.warc import WARC_SCHEMA, parse_warc_bytes
 
-    def _parse(batches):
-        cols = [f.name for f in WARC_SCHEMA.fields]
-        for pdf in batches:
-            rows: list[dict] = []
-            for p, c in zip(pdf["path"], pdf["content"]):
-                rows.extend(parse_warc_bytes(bytes(c), p))
-            yield pd.DataFrame(rows, columns=cols)
-
-    warc_key_schema = T.StructType([WARC_SCHEMA["url"], WARC_SCHEMA["warc_date"]])
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        parsed = batch_df.select("path", "content").mapInPandas(_parse, WARC_SCHEMA)
-        try:
-            # key-only explicit schema: no per-batch footer inference,
-            # and the anti-join runs before the dedup shuffle (§2.3)
-            seen = (
-                batch_df.sparkSession.read.schema(warc_key_schema)
-                .parquet(target_path)
-                .select("url", "warc_date")
-            )
-            parsed = parsed.join(seen, ["url", "warc_date"], "left_anti")
-        except AnalysisException:
-            pass  # first batch: target does not exist yet
-        parsed = parsed.dropDuplicates(["url", "warc_date"])
-        parsed.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            target_path
-        )
-
-    binary_file_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modificationTime", T.TimestampType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
+    return _upsert_stream(
+        _binary_drop_stream(spark, drop_dir, "*.warc*"),
+        _file_parser(lambda p, c: parse_warc_bytes(bytes(c), p), WARC_SCHEMA),
+        WARC_SCHEMA,
+        ["url", "warc_date"],
+        target_path,
+        "batch_id",
+        checkpoint_dir,
     )
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_file_schema)
-        .option("pathGlobFilter", "*.warc*")
-        .option("recursiveFileLookup", "true")
-        .load(drop_dir)
-    )
-    writer = stream.writeStream.foreachBatch(_upsert).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
 
 
 def streaming_ingest_bench(spark: SparkSession, sf_dir: str, n_batches: int = 4) -> dict:
@@ -242,7 +223,9 @@ def streaming_ingest_bench(spark: SparkSession, sf_dir: str, n_batches: int = 4)
     checkpoint, exactly the production entry point). Timed section =
     the streaming runs only; staging is excluded. Returns seconds,
     rows ingested (must equal the distinct source count: overlaps
-    deduped), and rows offered."""
+    deduped), rows offered, and `batch_duration_ms`: each micro-batch's
+    `durationMs` phase split (addBatch, triggerExecution, ...) from the
+    queries' progress, read after the timed section."""
     import os
     import shutil
     import tempfile
@@ -273,6 +256,7 @@ def streaming_ingest_bench(spark: SparkSession, sf_dir: str, n_batches: int = 4)
                 )
             part.write.parquet(_p.join(stage, f"b{i}"))
             offered += part.count()
+        queries = []
         t0 = _t.time()
         for i in range(n_batches):
             shutil.move(_p.join(stage, f"b{i}"), _p.join(drop, f"b{i}"))
@@ -280,7 +264,9 @@ def streaming_ingest_bench(spark: SparkSession, sf_dir: str, n_batches: int = 4)
                 spark, drop, target, schema, key="doc_id", checkpoint_dir=ckpt
             )
             q.awaitTermination()
+            queries.append(q)
         sec = _t.time() - t0
+        durations = [dict(p["durationMs"]) for q in queries for p in q.recentProgress]
         rows = spark.read.parquet(target).count()
         n_src = docs.count()
         return {
@@ -289,6 +275,7 @@ def streaming_ingest_bench(spark: SparkSession, sf_dir: str, n_batches: int = 4)
             "rows_offered": offered,
             "rows_source": n_src,
             "batches": n_batches,
+            "batch_duration_ms": durations,
         }
     finally:
         # a failure mid-run must not leak several staged copies of the

@@ -32,7 +32,7 @@ EVENTS_SCHEMA = T.StructType(
 # Last-terminated-stream telemetry, keyed by query name: state-store
 # row counts so claims like "state scales with occupied buckets, not
 # stream length" (streaming_lsh_first_seen) are MEASURED per run, not
-# asserted. Populated by every run_*_to_completion helper and by
+# asserted. Populated by run_to_completion and by
 # record_stream_progress for hand-rolled query loops; consumed by
 # tools/scaling_sf10.py's tws rows. Telemetry only — never read by a
 # query's own plan.
@@ -145,22 +145,34 @@ def session_agg(events: DataFrame, gap: str = "10 minutes") -> DataFrame:
 
 
 def run_to_completion(
-    agg: DataFrame, query_name: str, registry_name: str | None = None
+    df: DataFrame,
+    query_name: str,
+    mode: str = "complete",
+    registry_name: str | None = None,
 ) -> DataFrame:
-    """Drive a streaming aggregation over a finite file source to completion
-    and return the final result as a batch DataFrame (memory sink)."""
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    """Drive a stream over a finite source to completion in output
+    `mode` and return the memory-sink table as a batch DataFrame.
+
+    In "update" mode the sink holds one row per key per micro-batch that
+    touched the key, so it is the final state only if at most one batch
+    carried data. That is verified, not assumed: a multi-batch run (e.g.
+    maxFilesPerTrigger was set) raises instead of returning stale
+    per-key rows. Zero data batches is a legitimately EMPTY source."""
+    q = df.writeStream.outputMode(mode).format("memory").queryName(query_name).start()
     try:
         q.processAllAvailable()
+        data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
         record_stream_progress(q, query_name, registry_name)
     finally:
         q.stop()
-    return agg.sparkSession.sql(f"SELECT * FROM {query_name}")
+    if mode == "update" and data_batches > 1:
+        raise RuntimeError(
+            f"run_to_completion({query_name}): expected at most 1 data "
+            f"micro-batch from the finite source, saw {data_batches}; "
+            "update-mode memory-sink rows are per-batch running states and "
+            "cannot be disambiguated after a multi-batch run"
+        )
+    return df.sparkSession.sql(f"SELECT * FROM {query_name}")
 
 
 # ---------------------------------------------------------------------------
@@ -226,42 +238,6 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def run_stateful_to_completion(
-    agg: DataFrame, query_name: str, registry_name: str | None = None
-) -> DataFrame:
-    """Drive an update-mode stateful stream over a finite source; the
-    memory sink holds one row per key per micro-batch that touched the
-    key, so the result is only the final state if exactly one batch
-    carried data. That is verified, not assumed: if the source split
-    into multiple data batches (e.g. maxFilesPerTrigger was set), the
-    memory-sink table would hold stale per-key rows indistinguishable
-    from final ones, so we fail loudly instead of returning them."""
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        data_batches = sum(
-            1 for p in q.recentProgress if p["numInputRows"] > 0
-        )
-        record_stream_progress(q, query_name, registry_name)
-    finally:
-        q.stop()
-    if data_batches > 1:
-        raise RuntimeError(
-            f"run_stateful_to_completion({query_name}): expected at most 1 "
-            f"data micro-batch from the finite source, saw {data_batches}; "
-            "update-mode memory-sink rows are per-batch running states and "
-            "cannot be disambiguated after a multi-batch run"
-        )
-    # data_batches == 0 is a legitimately EMPTY finite source: the memory
-    # sink holds no rows and that empty table is the correct answer.
-    return agg.sparkSession.sql(f"SELECT * FROM {query_name}")
-
-
 # ---------------------------------------------------------------------------
 # streaming dedup (bounded state)
 # ---------------------------------------------------------------------------
@@ -316,26 +292,6 @@ def interval_join_stream(events: DataFrame, range_secs: int = 600, watermark: st
         & (F.col("clk_ts") < F.col("err_ts"))
     )
     return err.join(clk, cond, "inner").select("err_id", "click_id")
-
-
-def run_append_to_completion(
-    df: DataFrame, query_name: str, registry_name: str | None = None
-) -> DataFrame:
-    """Drive an append-mode stream (joins, dedup, row-level transforms)
-    over a finite source to completion; memory sink accumulates all
-    appended rows."""
-    q = (
-        df.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        record_stream_progress(q, query_name, registry_name)
-    finally:
-        q.stop()
-    return df.sparkSession.sql(f"SELECT * FROM {query_name}")
 
 
 # ---------------------------------------------------------------------------
